@@ -9,7 +9,7 @@ cd "$(dirname "$0")/.."
 
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 FACTOR="${SPARK_GRAFT_E2E_FACTOR:-6400}"
-RES="${SPARK_GRAFT_PIP_RES:-8}"
+RES=8 # graft.Bench.PipRes
 LEVELS=(2 8 32)
 OUT="BENCH"
 mkdir -p "$OUT"
@@ -25,7 +25,7 @@ declare -A TPS SEC
 for c in "${LEVELS[@]}"; do
   echo "== spark-submit local[$c] e2e (factor=$FACTOR res=$RES) ==" >&2
   line=$(SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS=$c \
-    SPARK_GRAFT_E2E_FACTOR=$FACTOR SPARK_GRAFT_PIP_RES=$RES \
+    SPARK_GRAFT_E2E_FACTOR=$FACTOR \
     SPARK_GRAFT_E2E_REPS=2 SPARK_GRAFT_ONLY=none SPARK_GRAFT_SKIP_R2SHAPE=1 \
     /opt/spark/bin/spark-submit --master "local[$c]" \
       --driver-memory "${SPARK_DRIVER_MEM:-8g}" \
@@ -47,10 +47,10 @@ e832 = t32f / (4 * t8f)
 doc = f"""# BENCH/BASELINE.md — scaling-efficiency evidence
 
 Protocol (BASELINE.md §protocol, driver instruction): the SAME
-end-to-end job — geo-entity extraction -> adaptive-salted partitioned
-cell-prefilter PIP join -> raster tiles, plus the FULL replication
-contract: the W1-deduped OsmChange batch applied by
-Replicator.applyOps across the node/way/relation layers and the
+end-to-end job — geo-entity extraction -> cell-prefilter PIP join
+(AQE picks broadcast vs. shuffle and splits hot cells) -> raster
+tiles, plus the FULL replication contract: the W1-deduped OsmChange
+batch applied by Replicator.applyOps across the node/way/relation layers and the
 owner-keyed triple store (three concurrent bucketed COW MERGEs + one
 merge-on-read delta commit; snapshot-store build untimed) — on the
 SAME input ({sf}, documents x{factor}
@@ -95,8 +95,8 @@ measures {e28:.2f}.
 Mitigations already in the plan (they moved 8->32 from 0.35 to
 {e832:.2f}): zero-copy codegen `pip_contains` over ArrayData (no
 per-row array materialization), bbox pretest reading only fixed-width
-bytes, histogram-driven salting (hot cells only), repartition of the
-small base set before the multiplying crossJoin, and cell resolution
+bytes, repartition of the small base set before the multiplying
+crossJoin, and cell resolution
 chosen to bound candidates/point (~50 at res {res} vs ~156 at res 6).
 
 Generated by scripts/bench_scaling.sh on {datetime.date.today().isoformat()}.

@@ -39,7 +39,7 @@ object Bench {
     "q11_exact_dedup", "q13_minhash_lsh_pairs", "q14_simhash",
     "q15_langid", "q17_token_count", "q18_fingerprint",
     "q19_cosine_topk", "q29_extract_entities", "q30_pip_join",
-    "q30b_pip_join_salted", "q31b_knn_rings", "q32_raster_tiles",
+    "q31b_knn_rings", "q32_raster_tiles",
     "q34_changes_dedup", "q38_delete_set", "q39_node_triples",
     "q40_nodes_after_merge", "q52_ways_after_merge", "q56_multipolygon_pip",
     "q60_incremental_pip", "q61_decontaminate", "q63_sessionize",
@@ -140,7 +140,7 @@ object Bench {
     * candidates (false positives) at the cost of a bigger cover
     * explode; 8 measured best on the synthetic density (7: 91k docs/s,
     * 8: 134k, 9: 80k at local[32] factor 100). */
-  val PipRes: Int = sys.env.getOrElse("SPARK_GRAFT_PIP_RES", "8").toInt
+  val PipRes: Int = 8
 
   /** Drop every cached plan and persisted RDD block (localCheckpoints
     * included) so the next timed run starts cache-cold. */
@@ -185,43 +185,9 @@ object Bench {
     Seq(nodes, baseWays, baseRels).foreach(_.unpersist())
   }
 
-  /** Optional e2e ring densification (VERDICT r4 item 7): interpolate
-    * K collinear points into every ring edge so the e2e join carries
-    * realistic polygon payloads (5-point synthetic rectangles become
-    * 5+4K-point rings, e.g. K=127 → 513 points — the RingBench regime
-    * where the broadcast ring dictionary wins) WITHOUT changing the
-    * join output: collinear edge splits preserve crossing parity, so
-    * hits are bit-identical to the undensified run (asserted by
-    * RingDensifySpec). */
-  val E2eRingDensify: Int =
-    sys.env.getOrElse("SPARK_GRAFT_RING_DENSIFY", "0").toInt
-
-  private[graft] val densifyUdf = udf((vs: Seq[Double], k: Int) =>
-    if (vs == null || vs.length < 2 || k <= 0) vs
-    else {
-      val out = new scala.collection.mutable.ArrayBuffer[Double](
-        vs.length + (vs.length - 1) * k)
-      var i = 0
-      while (i < vs.length - 1) {
-        val a = vs(i); val b = vs(i + 1)
-        out += a
-        var j = 1
-        while (j <= k) { out += a + (b - a) * j / (k + 1); j += 1 }
-        i += 1
-      }
-      out += vs.last
-      out.toSeq
-    })
-
-  /** The e2e polygon layer, densified iff SPARK_GRAFT_RING_DENSIFY>0. */
-  def e2ePolys(s: SparkSession, dir: String): DataFrame = {
-    val p = SpatialJoin.polygons(
-      SynthUniverse.wayMembers(s, dir), SynthUniverse.nodes(s, dir))
-    if (E2eRingDensify <= 0) p
-    else p.select(col("way_id"),
-      densifyUdf(col("xs"), lit(E2eRingDensify)).as("xs"),
-      densifyUdf(col("ys"), lit(E2eRingDensify)).as("ys"))
-  }
+  /** The e2e polygon layer. */
+  private def e2ePolys(s: SparkSession, dir: String): DataFrame =
+    SpatialJoin.polygons(SynthUniverse.wayMembers(s, dir), SynthUniverse.nodes(s, dir))
 
   /** The ×F-replicated geo-entity stream (shared by the e2e faces). */
   private def replicatedPoints(s: SparkSession, dir: String): DataFrame =
@@ -238,44 +204,8 @@ object Bench {
         (col("lon") + (col("rep") % 16 - 8) * 2.37).as("lon"),
         (col("lat") + (col("rep") % 8 - 4) * 1.93).as("lat"))
 
-  /** Salt parameters for the e2e PIP join, derived from the replica
-    * stream's size instead of frozen constants (a different sf or
-    * factor would otherwise silently stop salting): a cell is hot when
-    * it holds more than 1/4096 of the whole point stream, so a ×salt
-    * split caps any shard at ~0.02% of the stream. Deliberately
-    * CORE-COUNT-INDEPENDENT — the scaling protocol compares the same
-    * plan at 2/8/32 cores, and a per-core threshold would change the
-    * salting (and the work) between levels. At the protocol's
-    * sf0.1×6400 this lands at the empirically validated ~50k (r3's
-    * frozen constant); at factor 100 it keeps firing where the frozen
-    * constant silently stopped. Memoized per dir — the first (untimed
-    * warm-up) call pays the base-table count. Env overrides keep the
-    * knobs. */
-  private val saltCache = scala.collection.mutable.Map[String, (Int, Long)]()
-  def e2eSaltParams(s: SparkSession, dir: String): (Int, Long) =
-    saltCache.getOrElseUpdate(dir, {
-      val salt = sys.env.get("SPARK_GRAFT_E2E_SALT").map(_.toInt).getOrElse(16)
-      val hot = sys.env.get("SPARK_GRAFT_E2E_HOT").map(_.toLong).getOrElse {
-        val n = SynthUniverse.points(s, dir).count() * E2eFactor
-        math.max(1000L, n / 4096L)
-      }
-      (salt, hot)
-    })
-
-  /** Ring-payload strategy of the e2e PIP join (see
-    * [[graft.spatial.SpatialJoin.pipJoin]]'s ringDict contract).
-    * Default "inline": measured fastest here at every core count (the
-    * synthetic rings are 5-point rectangles, so the dictionary's extra
-    * probe is pure CPU overhead with no byte savings to repay it —
-    * q30 inline 1.65 s vs broadcast 2.07 s at sf0.1; the factor-6400
-    * scaling run regressed ~20-30% at ALL of local[2/8/32] under
-    * broadcast). The dictionary's win regime is real polygon layers
-    * whose rings are hundreds of points, where inline drags ~10× more
-    * bytes per candidate through the cover shuffle. */
-  val E2eRingDict: String = sys.env.getOrElse("SPARK_GRAFT_RING_DICT", "inline")
-
   /** The full north-rule pipeline as ONE job: extract geo-entities →
-    * partitioned+salted PIP join → raster tiles, PLUS the REAL
+    * cell-prefiltered PIP join → raster tiles, PLUS the REAL
     * replication contract — the W1-deduped change batch applied by
     * [[Replicator.applyOps]] across all three layers and the
     * owner-keyed triple store (bucketed MERGEs included). Returns
@@ -283,10 +213,7 @@ object Bench {
   def e2ePipeline(s: SparkSession, dir: String, storeRoot: String): Long = {
     val pts = replicatedPoints(s, dir)
     val polys = e2ePolys(s, dir)
-    val (salt, hot) = e2eSaltParams(s, dir)
-    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes,
-      mode = "partitioned", salt = salt, hotThreshold = hot,
-      ringDict = E2eRingDict)
+    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes)
     val tiles = pip
       .withColumn("tile", graft.geo.GeoFunctions.cellAt(col("lon"), col("lat"), 5))
       .groupBy(col("tile")).agg(count(lit(1)).as("n"))
@@ -302,10 +229,7 @@ object Bench {
   def e2eJoinR2(s: SparkSession, dir: String): Long = {
     val pts = replicatedPoints(s, dir)
     val polys = e2ePolys(s, dir)
-    val (salt, hot) = e2eSaltParams(s, dir)
-    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes,
-      mode = "partitioned", salt = salt, hotThreshold = hot,
-      ringDict = E2eRingDict)
+    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes)
     val tiles = pip
       .withColumn("tile", graft.geo.GeoFunctions.cellAt(col("lon"), col("lat"), 5))
       .groupBy(col("tile")).agg(count(lit(1)).as("n"))
@@ -320,10 +244,7 @@ object Bench {
   def e2eProfile(s: SparkSession, dir: String, storeRoot: String): Unit = {
     val pts = replicatedPoints(s, dir)
     val polys = e2ePolys(s, dir)
-    val (salt, hot) = e2eSaltParams(s, dir)
-    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes,
-      mode = "partitioned", salt = salt, hotThreshold = hot,
-      ringDict = E2eRingDict)
+    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes)
     val tiles = pip
       .withColumn("tile", graft.geo.GeoFunctions.cellAt(col("lon"), col("lat"), 5))
       .groupBy(col("tile")).agg(count(lit(1)).as("n"))

@@ -348,18 +348,7 @@ object SpatialQueries {
         round(col("lon") * 1e7, 0).cast("long").as("lon_e7"),
         round(col("lat") * 1e7, 0).cast("long").as("lat_e7"))),
     "q30_pip_join" -> ((s, dir) =>
-      SpatialJoin.pipJoin(SynthUniverse.points(s, dir), polys(s, dir), PipRes,
-          ringDict = "broadcast")
-        .select(col("doc_id"), col("entity"), col("way_id"))),
-    "q30b_pip_join_salted" -> ((s, dir) =>
-      // identical output over the partitioned+salted path (north rule:
-      // explicit skew mitigation must preserve exact join output)
-      // low hotThreshold so the histogram pre-pass actually salts the
-      // gazetteer hot cells here — the oracle then PROVES the salted
-      // plan's output is exactly the unsalted join's output
-      SpatialJoin.pipJoin(SynthUniverse.points(s, dir), polys(s, dir), PipRes,
-          mode = "partitioned", salt = 8, hotThreshold = 500L,
-          ringDict = "broadcast")
+      SpatialJoin.pipJoin(SynthUniverse.points(s, dir), polys(s, dir), PipRes)
         .select(col("doc_id"), col("entity"), col("way_id"))),
     "q31_knn" -> ((s, dir) =>
       SpatialJoin.knnBroadcast(SynthUniverse.points(s, dir), knnLayer(s, dir), 3)
@@ -379,16 +368,7 @@ object SpatialQueries {
       // in >=1 outer ring AND in no inner ring of the same relation
       SpatialJoin.pipJoinMulti(SynthUniverse.points(s, dir),
           relRings(s, dir).select(col("rel_id"), col("role"), col("xs"), col("ys")),
-          PipRes, ringDict = "broadcast")
-        .select(col("doc_id"), col("entity"), col("rel_id"))),
-    "q56b_multipolygon_salted" -> ((s, dir) =>
-      // same output over the partitioned+salted candidate join — the
-      // skew defense extends to the multipolygon operator and the
-      // oracle proves output exactness (cf. q30b)
-      SpatialJoin.pipJoinMulti(SynthUniverse.points(s, dir),
-          relRings(s, dir).select(col("rel_id"), col("role"), col("xs"), col("ys")),
-          PipRes, mode = "partitioned", salt = 8, hotThreshold = 500L,
-          ringDict = "broadcast")
+          PipRes)
         .select(col("doc_id"), col("entity"), col("rel_id"))),
     "q72_multipolygon_evenodd" -> ((s, dir) =>
       // nesting-correct containment: ODD number of containing member
@@ -397,7 +377,7 @@ object SpatialQueries {
       // rectangles per (point, relation) and keeps odd counts
       SpatialJoin.pipJoinMultiEvenOdd(SynthUniverse.points(s, dir),
           relRings(s, dir).select(col("rel_id"), col("role"), col("xs"), col("ys")),
-          PipRes, ringDict = "broadcast")
+          PipRes)
         .select(col("doc_id"), col("entity"), col("rel_id"))),
     "q57_multipolygon_wkt" -> ((s, dir) => {
       // multipolygon geometry ASSEMBLY: outer ring first, holes in member
@@ -566,9 +546,6 @@ object SpatialQueries {
         .select(col("rel_id"), col("role"), col("xs"), col("ys"))
         .cache()
       val pts = SynthUniverse.points(s, dir)
-      // (r6 wave 2: ringDict=broadcast was tried on both legs and
-      // REGRESSED 8.2→10.5 s — these synthetic rel rings are ~40
-      // points, below the dictionary's win regime; inline stays)
       val base = SpatialJoin.pipJoinMulti(pts, areaRings, PipRes)
       val st = graft.osm.ChangePipeline.staleWays(w, SynthUniverse.wayMembers(s, dir))
       // r6: sr feeds BOTH the affected and upserted sets — cache the
@@ -1433,7 +1410,7 @@ object SpatialQueries {
       // key, never a per-polygon scan of the misses.
       val pts = SynthUniverse.points(s, dir)
       val matched = SpatialJoin
-        .pipJoin(pts, polys(s, dir), PipRes, ringDict = "broadcast")
+        .pipJoin(pts, polys(s, dir), PipRes)
         .select(col("doc_id"), col("entity"))
       pts.join(matched, Seq("doc_id", "entity"), "left_anti")
         .select(col("doc_id"), col("entity"),
@@ -1746,8 +1723,7 @@ object SpatialQueries {
       // BOUNDED occupied-cell table (<= 4^res rows, ~340 here), done
       // as one sorted-array aggregate + posexplode — no window
       // anywhere (the engine keeps its no-unpartitioned-window
-      // invariant). This measurement is what feeds the salting
-      // decision (q30b's histogram pre-pass).
+      // invariant).
       val n = graft.geo.CellIndex.width(ContourRes)
       def q(v: Column, hi: Long): Column = {
         val f = floor(v).cast("long")
@@ -1908,15 +1884,15 @@ object SpatialQueries {
     }),
     "q255_join_cardinality_estimate" -> ((s, dir) => {
       // histogram-based spatial-join cardinality estimation — the
-      // OPTIMIZER-STATISTICS operator behind every salting/broadcast
-      // decision this engine makes (the PIP join's histogram pre-pass
-      // is its online cousin): per coarse res-5 tile, the candidate
-      // count a coarse uniform model predicts (NA·NB div 64 — 8×8
-      // res-8 children per tile) vs the EXACT candidate count the
-      // res-8 cell join would produce (Σ_child na·nb), error in ppm.
-      // Large errors mark skew — exactly the tiles the salted path
-      // exists for. Two bounded histograms (≤4^res rows), one
-      // equi-join on the child cell, everything integer.
+      // OPTIMIZER-STATISTICS view of the PIP join's broadcast and skew
+      // decisions (which AQE takes online from shuffle statistics):
+      // per coarse res-5 tile, the candidate count a coarse uniform
+      // model predicts (NA·NB div 64 — 8×8 res-8 children per tile)
+      // vs the EXACT candidate count the res-8 cell join would produce
+      // (Σ_child na·nb), error in ppm. Large errors mark skew — the
+      // tiles AQE's skew-join split exists for. Two bounded histograms
+      // (≤4^res rows), one equi-join on the child cell, everything
+      // integer.
       val f = 256L // res-8 grid
       def q8(v: Column, scale: Double, off: Double): Column = {
         val x = floor((v + off) / scale * f).cast("long")
@@ -2549,8 +2525,7 @@ object SpatialQueries {
       // the only exchange beyond the join is the per-zone fold; at
       // 100 TB the zone key is the natural partitioner and no
       // per-point row ever leaves its join stage unaggregated.
-      SpatialJoin.pipJoin(SynthUniverse.points(s, dir), polys(s, dir), PipRes,
-          ringDict = "broadcast")
+      SpatialJoin.pipJoin(SynthUniverse.points(s, dir), polys(s, dir), PipRes)
         .groupBy(col("way_id"))
         .agg(count(lit(1)).as("n_points"),
           countDistinct(col("doc_id")).as("n_docs"),
@@ -3268,8 +3243,7 @@ object SpatialQueries {
        |SELECT u AS user_id, pos, x, y FROM t$rounds WHERE k""".stripMargin
   }
 
-  /** One oracle for both multipolygon paths — the salted plan must
-    * reproduce the auto plan's rows exactly. */
+  /** Oracle of the holes-aware multipolygon join (q56). */
   private lazy val multiPipOracle: String =
       s"""WITH ${SynthSql.waysCte}, ${SynthSql.pointsCte}, ${SynthSql.relMembersCte}
          |SELECT DISTINCT p.doc_id, p.entity, r.rel_id
@@ -3751,11 +3725,6 @@ object SpatialQueries {
          |SELECT doc_id, entity, way_id
          |FROM points JOIN ways
          |  ON lon BETWEEN x0 AND x0 + w AND lat BETWEEN y0 AND y0 + h""".stripMargin,
-    "q30b_pip_join_salted" ->
-      s"""WITH ${SynthSql.waysCte}, ${SynthSql.pointsCte}
-         |SELECT doc_id, entity, way_id
-         |FROM points JOIN ways
-         |  ON lon BETWEEN x0 AND x0 + w AND lat BETWEEN y0 AND y0 + h""".stripMargin,
     "q144_pip_anti" ->
       s"""WITH ${SynthSql.waysCte}, ${SynthSql.pointsCte}
          |SELECT doc_id, entity,
@@ -3829,7 +3798,6 @@ object SpatialQueries {
          |  FROM points p, cents c)
          |WHERE rank <= 3""".stripMargin,
     "q56_multipolygon_pip" -> multiPipOracle,
-    "q56b_multipolygon_salted" -> multiPipOracle,
     "q72_multipolygon_evenodd" ->
       s"""WITH ${SynthSql.waysCte}, ${SynthSql.pointsCte}, ${SynthSql.relMembersCte}
          |SELECT doc_id, entity, rel_id FROM (

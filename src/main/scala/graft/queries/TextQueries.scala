@@ -1072,9 +1072,9 @@ object TextQueries {
       // tokens), then one groupBy(term) assembles the ordered list.
       // Skew note for 100 TB: stopword-grade terms concentrate a
       // whole-corpus posting on one reducer — production shards a
-      // posting list over pos ranges (the same salting scheme as the
-      // PIP join's hot cells) or drops df > cutoff terms before the
-      // second stage; the exact build here is the correctness anchor.
+      // posting list over pos ranges (q89b's salting scheme) or drops
+      // df > cutoff terms before the second stage; the exact build
+      // here is the correctness anchor.
       val tf = Tables.documents(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy(col("term"), col("doc_id"))
@@ -1094,8 +1094,7 @@ object TextQueries {
       // the plain build. Here stage 2a assembles per-(term, salt)
       // partial lists — a hot term's df rows split across 8 reducers —
       // and stage 2b merges a BOUNDED fan-in of 8 pre-sorted partials
-      // per term. Same technique as the PIP join's hot-cell salting
-      // (q30b): exactness is the oracle's job, skew-split the plan's.
+      // per term: exactness is the oracle's job, skew-split the plan's.
       val salt = 8
       val tf = Tables.documents(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))

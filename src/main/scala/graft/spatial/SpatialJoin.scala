@@ -19,10 +19,13 @@ import graft.geo.{CellIndex, GeoFunctions}
   *  - each point encodes to exactly ONE cell (codegen'd arithmetic) —
   *    so the equi-join emits no duplicate candidates and needs no
   *    post-dedup;
-  *  - exact JTS covers() refine on the candidate set only;
-  *  - the polygon side is broadcast when small; the partitioned path
-  *    salts the polygon side ×S and keys points by (cell, hash%S) to
-  *    split hot cells (explicit skew mitigation per the north rule).
+  *  - a bbox pretest and the exact boundary-inclusive `pip_contains`
+  *    refine run on the candidate set only;
+  *  - the cell join carries no hint: Catalyst/AQE broadcasts the cover
+  *    when its size statistics fall under the broadcast threshold, and
+  *    otherwise shuffles both sides on the cell, where AQE's skew-join
+  *    split (`spark.sql.adaptive.skewJoin.*`) divides the partitions of
+  *    hot cells from the observed shuffle sizes.
   */
 object SpatialJoin {
 
@@ -82,139 +85,39 @@ object SpatialJoin {
     inside
   }
 
-  /** UDF face of [[pointInRing]]. */
-  val coversUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((xs: Seq[Double], ys: Seq[Double], px: Double, py: Double) =>
-      pointInRing(xs.toArray, ys.toArray, px, py))
-
-  /** Cell-prefiltered PIP join.
+  /** Cell-prefiltered PIP join: one output row per (point, polygon)
+    * pair where the polygon covers the point (boundary inclusive).
     *
-    * @param points   (pointCols..., lon, lat)
-    * @param polys    (way_id, xs, ys) from [[polygons]]
-    * @param res      join resolution (cell edge must be >= max polygon
-    *                 edge for single-res cover to stay small)
-    * @param mode     "auto"      — no hints; Catalyst/AQE picks the
-    *                               build side from runtime stats (the
-    *                               default: the exploded cover carries
-    *                               ring arrays and is often BIGGER than
-    *                               the point batch — force-broadcasting
-    *                               it serializes the whole join behind
-    *                               a single-threaded broadcast build);
-    *                 "broadcast" — force-broadcast the cover (small
-    *                               polygon layers);
-    *                 "partitioned" — shuffle both sides on cell.
-    * @param salt     >1 enables salted skew-split on the partitioned
-    *                 path (the MAX per-cell salt factor)
-    * @param hotThreshold point rows per cell above which that cell is
-    *                 salted. Salting is HISTOGRAM-DRIVEN (SURVEY §4.3):
-    *                 a pre-pass counts points per cell and only hot
-    *                 cells replicate their polygon rows — blanket ×salt
-    *                 replication of the whole cover multiplies the
-    *                 shuffle by `salt` for data that was never skewed
-    *                 (measured: blanket ×8 made the join slower than
-    *                 unsalted at every parallelism level).
+    * @param points (pointCols..., lon, lat)
+    * @param polys  (way_id, xs, ys) from [[polygons]]
+    * @param res    join resolution (cell edge must be >= max polygon
+    *               edge for single-res cover to stay small)
     */
-  /** Ring rows -> exploded cover with bbox scalars (shared candidate
-    * generation of [[pipJoin]] and [[pipJoinMulti]]). */
-  private def coverWithBbox(rings: DataFrame, res: Int): DataFrame = rings
-    .withColumn("cell", explode(org.apache.spark.sql.GraftSqlShim.column(
-      CoverCellsExpr(
-        org.apache.spark.sql.GraftSqlShim.expression(col("xs")),
-        org.apache.spark.sql.GraftSqlShim.expression(col("ys")), res))))
-    .withColumn("minx", array_min(col("xs"))).withColumn("maxx", array_max(col("xs")))
-    .withColumn("miny", array_min(col("ys"))).withColumn("maxy", array_max(col("ys")))
+  def pipJoin(points: DataFrame, polys: DataFrame, res: Int): DataFrame =
+    refined(points, polys, res)
 
-  /** Candidate generation: pts(cell) ⋈ cover(cell) under the selected
-    * strategy (auto / broadcast / partitioned with histogram salting) —
-    * shared by [[pipJoin]] and [[pipJoinMulti]]; see pipJoin's scaladoc
-    * for the mode/salt/hotThreshold contract. */
-  private def cellJoin(pts: DataFrame, cover: DataFrame, mode: String,
-      salt: Int, hotThreshold: Long): DataFrame = {
-    require(Set("auto", "broadcast", "partitioned")(mode),
-      s"join mode must be auto|broadcast|partitioned, got '$mode'")
-    if (mode == "broadcast") pts.join(broadcast(cover), "cell")
-    else if (mode == "auto") pts.join(cover, "cell")
-    else if (salt <= 1) pts.join(cover.hint("shuffle_hash"), "cell")
-    else {
-      // per-cell histogram -> salt factor min(salt, ceil(cnt/threshold))
-      // for hot cells only; join output stays exact (each point picks
-      // ONE deterministic shard, each hot polygon row covers all).
-      val hist = pts.groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > hotThreshold)
-        .select(col("cell"),
-          least(lit(salt.toLong), ceil(col("cnt").cast("double") / hotThreshold).cast("long"))
-            .cast("int").as("saltN"))
-      val saltedCover = cover.join(broadcast(hist), Seq("cell"), "left")
-        .withColumn("s", explode(sequence(lit(0), coalesce(col("saltN"), lit(1)) - 1)))
-        .drop("saltN")
-      val saltedPts = pts.join(broadcast(hist), Seq("cell"), "left")
-        .withColumn("s",
-          coalesce(pmod(hash(col("lon"), col("lat")), col("saltN")), lit(0)))
-        .drop("saltN")
-      saltedPts.join(saltedCover.hint("shuffle_hash"), Seq("cell", "s")).drop("s")
-    }
-  }
-
-  /** Join the bbox-surviving candidate stream to a ring dictionary and
-    * run the native refine. The dictionary holds each ring ONCE — the
-    * candidate stream never carries ring arrays (see [[pipJoin]]'s
-    * ringDict contract). */
-  private def refineViaDict(cand: DataFrame, dict: DataFrame,
-      dictKey: Seq[String], ringDict: String): DataFrame = {
-    val dictSide = if (ringDict == "broadcast") broadcast(dict)
-      else dict.hint("shuffle_hash")
-    cand.join(dictSide, dictKey)
-      .filter(PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat")))
-      .drop("cell", "xs", "ys", "minx", "maxx", "miny", "maxy", "__rk")
-  }
-
-  /** Valid `ringDict` strategies of [[pipJoin]] / [[pipJoinMulti]] /
-    * [[pipJoinMultiEvenOdd]]:
-    *
-    *  - "inline": the classic single join — ring arrays ride the
-    *    exploded cover (one copy per covering cell) and the refine runs
-    *    inside the cell join's stage. No second join; the right default
-    *    when the polygon layer's size is unknown.
-    *  - "broadcast": the cell join is SLIM — only (cell, id, 4 bbox
-    *    scalars) enter its build side, so every candidate probe reads a
-    *    ~1-cache-line row instead of one dragging ring arrays; bbox
-    *    survivors (typically a third of candidates) then probe a
-    *    BROADCAST (id -> ring) dictionary holding each ring exactly
-    *    once, and the refine fuses into the same stage — ZERO extra
-    *    exchange. The choice for layers that fit executor memory
-    *    (every layer in this repo's bench; a planet-scale OSM polygon
-    *    layer at ~10^7 rings x ~200 B still fits).
-    *  - "shuffle": slim cell join + SHUFFLED dictionary join — for
-    *    layers past broadcast size. Pays one extra exchange of the
-    *    bbox-surviving candidates (slim rows), in return for never
-    *    replicating ring arrays per covering cell through the cover
-    *    shuffle.
-    */
-  private val RingDictModes = Set("inline", "broadcast", "shuffle")
-
-  def pipJoin(points: DataFrame, polys: DataFrame, res: Int,
-      mode: String = "auto", salt: Int = 1,
-      hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {
-    require(RingDictModes(ringDict), s"ringDict must be inline|broadcast|shuffle, got '$ringDict'")
+  /** Candidate-and-refine core shared by every PIP join: the points
+    * equi-join the exploded cover on their single cell with NO hint, so
+    * Catalyst/AQE picks broadcast vs. shuffle from size statistics and,
+    * on the shuffle path, AQE's skew-join split divides hot cells. The
+    * bbox columns ride along as 4 scalars: the refine first rejects on
+    * them (fixed-width reads only) and dereferences the ring arrays'
+    * variable-length bytes ONLY for bbox-passing candidates; the fused
+    * `pip_contains` refine then runs inside the join's stage. */
+  private def refined(points: DataFrame, rings: DataFrame, res: Int): DataFrame = {
     val pts = points.withColumn("cell", GeoFunctions.cellAt(col("lon"), col("lat"), res))
-    if (ringDict == "inline") {
-      // bbox columns ride along as 4 scalars: the refine first rejects
-      // on them (fixed-width reads only) and dereferences the ring
-      // arrays' variable-length bytes ONLY for bbox-passing candidates.
-      val cover = coverWithBbox(polys, res)
-      cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy") &&
-          PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat")))
-        .drop("cell", "xs", "ys", "minx", "maxx", "miny", "maxy")
-    } else {
-      val cover = coverWithBbox(polys, res).drop("xs", "ys")
-      val cand = cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy"))
-      refineViaDict(cand, polys.select(col("way_id"), col("xs"), col("ys")),
-        Seq("way_id"), ringDict)
-    }
+    val cover = rings
+      .withColumn("cell", explode(org.apache.spark.sql.GraftSqlShim.column(
+        CoverCellsExpr(
+          org.apache.spark.sql.GraftSqlShim.expression(col("xs")),
+          org.apache.spark.sql.GraftSqlShim.expression(col("ys")), res))))
+      .withColumn("minx", array_min(col("xs"))).withColumn("maxx", array_max(col("xs")))
+      .withColumn("miny", array_min(col("ys"))).withColumn("maxy", array_max(col("ys")))
+    pts.join(cover, "cell")
+      .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
+        col("lat") >= col("miny") && col("lat") <= col("maxy") &&
+        PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat")))
+      .drop("cell", "xs", "ys", "minx", "maxx", "miny", "maxy")
   }
 
   /** Multipolygon (holes-aware) PIP join — the area semantics the
@@ -233,58 +136,20 @@ object SpatialJoin {
     * point's cell, so rings absent from the join are provably
     * non-containing), the codegen refine keeps true hits only, and ONE
     * aggregate per (point, relation) folds role hits into
-    * outer-AND-NOT-inner. Scale shape: same single shuffle as
+    * outer-AND-NOT-inner. Scale shape: the same candidate join as
     * [[pipJoin]] plus a map-side-combined aggregate on the identical
     * (pointKey, rel) key — no extra exchange beyond the groupBy.
     *
     * @param rings (rel_id, role, xs, ys) — one row per member ring
     */
   def pipJoinMulti(points: DataFrame, rings: DataFrame, res: Int,
-      keyCols: Seq[String] = Seq("doc_id", "entity"),
-      mode: String = "auto", salt: Int = 1,
-      hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {
-    multiRefined(points, rings, res, mode, salt, hotThreshold, ringDict)
+      keyCols: Seq[String] = Seq("doc_id", "entity")): DataFrame =
+    refined(points, rings, res)
       .groupBy(keyCols.map(col) :+ col("rel_id"): _*)
       .agg(max(when(col("role") === "outer", 1).otherwise(0)).as("o_hit"),
         max(when(col("role") =!= "outer", 1).otherwise(0)).as("i_hit"))
       .filter(col("o_hit") === 1 && col("i_hit") === 0)
       .drop("o_hit", "i_hit")
-  }
-
-  /** Shared slim-candidate generation of the multipolygon joins:
-    * (rel_id, role) does not identify a RING (a relation may carry
-    * several outers), so the ring dictionary keys on
-    * `__rk = xxhash64(rel_id, role, xs, ys)` — a pure function of row
-    * content, so the cover plan and the dictionary plan derive
-    * identical keys independently. Byte-identical duplicate rings
-    * share a key by design (the dictionary dedups; each duplicate's
-    * own cover row preserves its hit multiplicity). Two DISTINCT rings
-    * of one (relation, role) colliding on the 64-bit hash would
-    * mis-pair — probability ~2^-64 per same-role ring pair,
-    * documented trade for keeping arrays out of the candidate
-    * exchange. */
-  private def multiRefined(points: DataFrame, rings: DataFrame, res: Int,
-      mode: String, salt: Int, hotThreshold: Long, ringDict: String): DataFrame = {
-    require(RingDictModes(ringDict), s"ringDict must be inline|broadcast|shuffle, got '$ringDict'")
-    val pts = points.withColumn("cell", GeoFunctions.cellAt(col("lon"), col("lat"), res))
-    if (ringDict == "inline") {
-      val cover = coverWithBbox(rings, res)
-      cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy") &&
-          PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat")))
-    } else {
-      val ringsK = rings.withColumn("__rk",
-        xxhash64(col("rel_id"), col("role"), col("xs"), col("ys")))
-      val cover = coverWithBbox(ringsK, res).drop("xs", "ys")
-      val cand = cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy"))
-      refineViaDict(cand,
-        ringsK.select(col("__rk"), col("xs"), col("ys")).dropDuplicates("__rk"),
-        Seq("__rk"), ringDict)
-    }
-  }
 
   /** Even-odd multipolygon containment — the NESTING-correct variant
     * of [[pipJoinMulti]]: a point is inside iff it lies in an ODD
@@ -302,15 +167,12 @@ object SpatialJoin {
     * count both (even → excluded) — the deliberate convention the
     * oracle's inclusive BETWEEN mirrors. */
   def pipJoinMultiEvenOdd(points: DataFrame, rings: DataFrame, res: Int,
-      keyCols: Seq[String] = Seq("doc_id", "entity"),
-      mode: String = "auto", salt: Int = 1,
-      hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {
-    multiRefined(points, rings, res, mode, salt, hotThreshold, ringDict)
+      keyCols: Seq[String] = Seq("doc_id", "entity")): DataFrame =
+    refined(points, rings, res)
       .groupBy(keyCols.map(col) :+ col("rel_id"): _*)
       .agg(count(lit(1)).as("__hits"))
       .filter(pmod(col("__hits"), lit(2)) === 1)
       .drop("__hits")
-  }
 
   /** Exact brute-force kNN against a broadcast centroid layer — the
     * correctness baseline. The small layer ships as ONE array literal

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Physical-plan conformance: the properties that make the engine hold
   * at 100 TB are asserted, not assumed — filter pushdown and column
   * pruning reach the parquet scan THROUGH the partition-count-gated
-  * spread, the partitioned spatial join really shuffles (no accidental
-  * broadcast of a TB-scale side), and the refine predicate is the
-  * native codegen expression. */
+  * spread, a small polygon layer broadcasts without a hint, and the
+  * refine predicate is the native codegen expression (the shuffled,
+  * skew-split spatial join is covered by graft.spatial.PipJoinSpec). */
 class PlanSpec extends SparkTestBase {
 
   private def formatted(df: org.apache.spark.sql.DataFrame): String =
@@ -23,19 +23,12 @@ class PlanSpec extends SparkTestBase {
     assert(plan.contains("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>"), plan)
   }
 
-  test("partitioned+salted PIP join plans a shuffled join with the codegen refine") {
-    val plan = formatted(SparkEntry.queries("q30b_pip_join_salted")(spark, sfSmall))
-    assert(plan.contains("ShuffledHashJoin"), plan.linesIterator.take(40).mkString("\n"))
-    assert(plan.contains("pip_contains"), "native refine expression missing from plan")
-  }
-
   test("broadcast PIP path plans a BroadcastHashJoin") {
     val pts = synth.SynthUniverse.points(spark, sfSmall)
     val polys = spatial.SpatialJoin.polygons(
       synth.SynthUniverse.wayMembers(spark, sfSmall),
       synth.SynthUniverse.nodes(spark, sfSmall))
-    val plan = formatted(
-      spatial.SpatialJoin.pipJoin(pts, polys, res = 6, mode = "broadcast"))
+    val plan = formatted(spatial.SpatialJoin.pipJoin(pts, polys, res = 6))
     assert(plan.contains("BroadcastHashJoin"), plan.linesIterator.take(30).mkString("\n"))
   }
 
